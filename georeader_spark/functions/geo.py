@@ -11,9 +11,7 @@ Reference semantics re-expressed:
 - xyz tile        — /root/reference/georeader/read.py:437-491
 - utm epsg        — /root/reference/georeader/__init__.py:63-127
 - solar datetime  — /root/reference/georeader/readers/query_utils.py:58-81
-- haversine       — SQL-expressible distance used by oracle-gated kNN
-- window/tile assignment — window_from_bounds + round_outer_window
-  (/root/reference/georeader/read.py:316-367, window_utils.py:532-591)
+- haversine       — great-circle distance for the kNN operators
 """
 
 from __future__ import annotations
@@ -23,8 +21,6 @@ import math
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-from ..kernels.affine import Affine
 
 R_SHIFT = 18014398509481984  # 2**54
 Y_SHIFT = 134217728  # 2**27
@@ -59,14 +55,6 @@ def cell_encode_sql(lon: str, lat: str, r: int) -> str:
         f"(CAST({r} AS BIGINT) * {R_SHIFT} + CAST({y} AS BIGINT) * {Y_SHIFT} "
         f"+ CAST({x} AS BIGINT))"
     )
-
-
-def cell_x(cell: Column) -> Column:
-    return cell % F.lit(Y_SHIFT)
-
-
-def cell_y(cell: Column) -> Column:
-    return (cell % F.lit(R_SHIFT)) / F.lit(Y_SHIFT)
 
 
 def cell_parent(cell: Column, r: int, r_parent: int) -> Column:
@@ -159,7 +147,7 @@ def solar_day_sql(ts: str, lon: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Haversine distance (same double math in both engines)
+# Haversine distance
 # ---------------------------------------------------------------------------
 
 EARTH_R = 6371008.8
@@ -173,51 +161,6 @@ def haversine_m(lon1: Column, lat1: Column, lon2: Column, lat2: Column) -> Colum
         + F.cos(F.radians(lat1)) * F.cos(F.radians(lat2)) * F.pow(F.sin(dlon / 2), 2)
     )
     return F.lit(2.0 * EARTH_R) * F.asin(F.sqrt(a))
-
-
-def haversine_m_sql(lon1: str, lat1: str, lon2: str, lat2: str) -> str:
-    dlat = f"RADIANS({lat2} - {lat1})"
-    dlon = f"RADIANS({lon2} - {lon1})"
-    a = (
-        f"(POW(SIN({dlat} / 2), 2) + COS(RADIANS({lat1})) * COS(RADIANS({lat2})) "
-        f"* POW(SIN({dlon} / 2), 2))"
-    )
-    return f"(2.0 * {EARTH_R!r} * ASIN(SQRT({a})))"
-
-
-# ---------------------------------------------------------------------------
-# Window / tile assignment from a fixed grid spec
-# ---------------------------------------------------------------------------
-
-def pixel_col(transform: Affine, x: Column) -> Column:
-    """Fractional pixel column of geo x under a rectilinear transform:
-    (x - c) / a. Asserts rectilinearity (SURVEY.md §7.3 #5)."""
-    if not transform.is_rectilinear:
-        raise ValueError("SQL pixel math requires a rectilinear transform")
-    return (x - F.lit(transform.c)) / F.lit(transform.a)
-
-
-def pixel_row(transform: Affine, y: Column) -> Column:
-    if not transform.is_rectilinear:
-        raise ValueError("SQL pixel math requires a rectilinear transform")
-    return (y - F.lit(transform.f)) / F.lit(transform.e)
-
-
-def tile_index(px: Column, tile_size: int) -> Column:
-    """Pixel coordinate -> tile index (floor division)."""
-    return F.floor(px / F.lit(float(tile_size))).cast("long")
-
-
-def pixel_col_sql(transform: Affine, x: str) -> str:
-    return f"(({x} - {transform.c!r}) / {transform.a!r})"
-
-
-def pixel_row_sql(transform: Affine, y: str) -> str:
-    return f"(({y} - {transform.f!r}) / {transform.e!r})"
-
-
-def tile_index_sql(px: str, tile_size: int) -> str:
-    return f"CAST(FLOOR({px} / {float(tile_size)!r}) AS BIGINT)"
 
 
 def transform_points_udf(src_crs: str, dst_crs: str):
@@ -235,30 +178,6 @@ def transform_points_udf(src_crs: str, dst_crs: str):
     def _udf(x: pd.Series, y: pd.Series) -> pd.DataFrame:
         u, v = kproj.transform_points(x.to_numpy(), y.to_numpy(), src_crs, dst_crs)
         return pd.DataFrame({"x": u, "y": v})
-
-    return _udf
-
-
-def pixel_size_meters_udf(crs_transform: str, transform, crs_point: str = "EPSG:4326"):
-    """Arrow-batched pixel-size-at-point (reference pixel_size_meters,
-    __init__.py:333-420): maps (x, y) point columns to struct(width_m,
-    height_m) — ground size of one raster pixel at each location.
-    Projected raster CRS folds to a constant; geographic CRS projects
-    each point's pixel neighbors to its local UTM zone (kernels/proj)."""
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    from ..kernels import proj as kproj
-
-    schema = StructType(
-        [StructField("width_m", DoubleType()), StructField("height_m", DoubleType())]
-    )
-
-    @F.pandas_udf(schema)
-    def _udf(x: pd.Series, y: pd.Series) -> pd.DataFrame:
-        w, h = kproj.pixel_size_meters(
-            x.to_numpy(), y.to_numpy(), crs_transform, transform, crs_point
-        )
-        return pd.DataFrame({"width_m": w, "height_m": h})
 
     return _udf
 

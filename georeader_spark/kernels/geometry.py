@@ -285,16 +285,6 @@ def _parse_polygon_body(buf: bytes, off: int):
     return rings, off
 
 
-def wkb_polygons(buf: bytes) -> List[PolygonT]:
-    """Any polygonal WKB -> list of polygons (normalizing multi/single)."""
-    kind, geom = parse_wkb(buf)
-    if kind == "polygon":
-        return [geom]
-    if kind == "multipolygon":
-        return geom
-    raise ValueError(f"expected polygonal WKB, got {kind}")
-
-
 def transform_polygon_crs(rings, src_crs: str, dst_crs: str):
     """polygon_to_crs for arbitrary registered CRS (reference
     window_utils.py:1043-1122 via transform_geom): apply the proj router

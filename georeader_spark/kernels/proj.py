@@ -1296,12 +1296,6 @@ def transform_points(x: ArrayLike, y: ArrayLike, src_crs: str, dst_crs: str):
     return from_wgs84(lon, lat, dst_crs)
 
 
-def supported_epsg() -> list:
-    out = [4326, 3857] + list(EPSG_PARAMS)
-    out += list(range(32601, 32661)) + list(range(32701, 32761))
-    return sorted(out)
-
-
 def is_projected(crs: str) -> bool:
     """True for CRSs whose native units are meters (everything the
     registry knows except geographic EPSG:4326)."""

@@ -19,7 +19,6 @@ import re
 from typing import List, Optional, Tuple
 
 import numpy as np
-import pandas as pd
 
 _TAG_RE = re.compile(r"<[^>]*>")
 _SCRIPT_RE = re.compile(r"<(script|style)\b[^>]*>.*?</\1>", re.DOTALL | re.IGNORECASE)
@@ -45,11 +44,6 @@ def extract_text(html: bytes) -> str:
     for ent, ch in _ENTITIES:
         s = s.replace(ent, ch)
     return _WS_RE.sub(" ", s).strip()
-
-
-def extract_text_batch(html: pd.Series) -> pd.Series:
-    """Arrow-batch variant for pandas UDFs."""
-    return html.map(extract_text)
 
 
 def extract_geotag(html: bytes) -> Optional[Tuple[float, float]]:

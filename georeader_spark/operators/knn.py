@@ -104,6 +104,11 @@ def knn_join(
     distance is within that bound the query is exact. Stragglers in
     empty regions fall back to brute force after ``max_rounds``.
 
+    ``q_id`` must be unique across ``queries``. The driver counts pending
+    queries by row but resolved ones by distinct id, so with duplicate
+    ids the pending count never reaches 0 and the loop runs all
+    ``max_rounds``.
+
     Returns ``(q_id, qx, qy, point_id, d2, rank)``.
     """
     if min_cell_extent is None:

@@ -283,8 +283,3 @@ def boxes_to_polytable(
     return [
         (pid, [[kgeom.box_ring(x0, y0, x1, y1)]]) for pid, x0, y0, x1, y1 in boxes
     ]
-
-
-def wkb_to_polytable(rows: Sequence[Tuple[int, bytes]]) -> PolyTable:
-    """(poly_id, wkb) rows -> PolyTable (polygon or multipolygon WKB)."""
-    return [(pid, kgeom.wkb_polygons(buf)) for pid, buf in rows]

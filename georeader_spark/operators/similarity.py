@@ -305,8 +305,10 @@ def lloyd_train_multi(
         # shuffle; the window then sorts ~64 * n_clusters rows per
         # group. If any group comes up short of the threshold filter
         # (possible only for degenerate tiny groups), fall back to the
-        # exact full window — both paths return the identical seed set,
-        # so the choice never changes a result bit.
+        # exact full window. Both paths pick the same seeds up to ties on
+        # _h: row_number orders equal hashes (duplicate vectors, or a
+        # 64-bit collision) arbitrarily, so at the n_clusters boundary
+        # the two paths may take different tied rows.
         counts = {
             r["grp"]: r["count"]
             for r in sliced.groupBy("grp").count().collect()

@@ -23,58 +23,6 @@ def whitespace_token_count_col(text: Column) -> Column:
     return F.when(t == "", F.lit(0)).otherwise(F.size(F.split(t, r"\s+")))
 
 
-def bpe_ish_token_count_col(text: Column) -> Column:
-    """BPE-ish token count: letter runs + digit runs + single punct.
-
-    Counted as total chars minus chars absorbed into runs — pure
-    regexp_replace algebra, no UDF: each letter/digit run collapses to
-    one token, every other non-space char is one token.
-    """
-    # collapse letter runs and digit runs to a single sentinel, drop spaces
-    collapsed = F.regexp_replace(
-        F.regexp_replace(text, r"[A-Za-z]+", ""),
-        r"[0-9]+",
-        "",
-    )
-    no_space = F.regexp_replace(collapsed, r"\s+", "")
-    return F.length(no_space)
-
-
-def punct_ratio_col(text: Column) -> Column:
-    """Non-alphanumeric-non-space chars / max(1, chars)."""
-    punct = F.length(F.regexp_replace(text, r"[A-Za-z0-9\s]", ""))
-    return punct / F.greatest(F.length(text), F.lit(1))
-
-
-def stopword_ratio_col(text: Column) -> Column:
-    """English stopword tokens / max(1, tokens) (lowercased)."""
-    t = F.lower(F.trim(text))
-    toks = F.split(t, r"\s+")
-    n = F.size(toks)
-    sw = F.size(
-        F.filter(toks, lambda x: x.isin("the", "and", "of", "a", "to"))
-    )
-    return sw / F.greatest(n, F.lit(1))
-
-
-def quality_score_col(text: Column) -> Column:
-    """Quality heuristic matching kernels.text.quality_score:
-    0.4*min(1, words/100) + 0.3*(1 - punct_ratio) + 0.3*min(1, 5*sw_ratio).
-
-    NOTE: composing this as one Column duplicates the split()/filter()
-    subtrees, which Catalyst handles pathologically (minutes for 500
-    rows). Prefer :func:`quality_score_staged`, which projects each
-    intermediate once; this Column form is kept for API parity and
-    small expressions.
-    """
-    words = whitespace_token_count_col(text)
-    return (
-        F.lit(0.4) * F.least(F.lit(1.0), words / F.lit(100.0))
-        + F.lit(0.3) * (F.lit(1.0) - punct_ratio_col(text))
-        + F.lit(0.3) * F.least(F.lit(1.0), F.lit(5.0) * stopword_ratio_col(text))
-    )
-
-
 def quality_score_staged(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Quality score with intermediates projected once per stage (the
     plan Catalyst should see): docs + ``quality`` column (unrounded)."""
@@ -145,20 +93,3 @@ def fingerprint_udf_col(text: Column) -> Column:
         return t.map(lambda s: ktext.rolling_fingerprint(s or "") % (1 << 62))
 
     return fp(text)
-
-
-def doc_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Convenience: append all text-stat columns."""
-    t = F.col(text_col)
-    staged = quality_score_staged(docs, text_col).withColumn(
-        "quality", F.round(F.col("quality"), 6)
-    )
-    return staged.withColumns(
-        {
-            "n_tokens_ws": whitespace_token_count_col(t),
-            "n_tokens_bpe": bpe_ish_token_count_col(t),
-            "punct_ratio": F.round(punct_ratio_col(t), 6),
-            "stopword_ratio": F.round(stopword_ratio_col(t), 6),
-            "lang_pred": lang_id_col(t),
-        }
-    )

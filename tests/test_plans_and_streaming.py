@@ -21,6 +21,23 @@ def _optimized(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
+def _plan_node_names(df) -> list:
+    """Node names of the executed plan, walked as a tree (each node
+    once; ``explain("formatted")`` prints every node twice). An adaptive
+    plan is a leaf wrapper, so the walk descends into its current plan."""
+
+    def walk(node):
+        if node.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan())
+        kids = node.children()
+        out = [node.nodeName()]
+        for i in range(kids.size()):
+            out += walk(kids.apply(i))
+        return out
+
+    return walk(df._jdf.queryExecution().executedPlan())
+
+
 class TestPlanShapes:
     def test_pip_join_is_broadcast(self, spark):
         """The polygon-cover side must broadcast: shuffling the points
@@ -667,6 +684,22 @@ class TestRound5PlanShapes:
         plan = _plan(semantic_dedup(vecs, cents))
         assert "CartesianProduct" not in plan
         assert "cluster" in plan
+
+
+class TestArrowEvalPythonCount:
+    """The LSH bucket and IVF list-assignment UDFs are marked
+    asNondeterministic so that Catalyst cannot clone the call into an
+    inferred isnotnull filter; without the flag a side carries two
+    chained ArrowEvalPython nodes running the same UDF. These pins catch
+    a refactor or Spark upgrade that re-duplicates them: one node per
+    side, two per plan."""
+
+    @pytest.mark.parametrize("name", ["ann_lsh_topk", "ann_ivf_topk"])
+    def test_one_arrow_eval_python_per_side(self, spark, sf_dir, name):
+        from georeader_spark.queries import REGISTRY
+
+        df = REGISTRY[name][0](spark, sf_dir)
+        assert _plan_node_names(df).count("ArrowEvalPython") == 2
 
 
 class TestStreamingLshDedup:
