@@ -1,35 +1,29 @@
-"""kNN lookups via cell-ring expansion (north rule; SURVEY.md §2.3).
+"""kNN lookups (north rule; SURVEY.md §2.3).
 
 The reference has no kNN (nearest-neighbor appears only as scipy
 griddata Voronoi assignment, griddata.py:328-330); the north rule
 requires one built on the cell index.
 
-Two strategies, both returning ``(query cols..., neighbor cols...,
-rank, dist_m)``:
+Two strategies:
 
 - :func:`knn_bruteforce` — broadcast the (small) query set, crossJoin
   + haversine + ``row_number`` rank. The right plan when |Q| is small:
   one pass over the big table, no shuffle of the big side beyond the
   rank partitioning on query id. Fully SQL-expressible -> oracle-gated.
-- :func:`knn_ring` — candidates restricted to cells within Chebyshev
-  ring ``k_ring`` of each query's cell (broadcast (query, cell) pairs,
-  equi-join on cell). Iteratively doubles the ring for queries that
-  did not find k *guaranteed* neighbors. The guarantee: a neighbor at
-  ring distance > kr is at least ``(kr) * cell_h_deg`` degrees of
-  latitude away; once the kth candidate is closer than that bound the
-  ring is sufficient. This is the scale path: at 10^12 points the
-  cell equi-join touches only ring cells' partitions.
+- :func:`knn_join` — a query *DataFrame* against the points on a
+  planar grid: candidates come from an equi-join on the cells within a
+  Chebyshev ring of each query's cell, and the ring doubles for queries
+  that did not find k *guaranteed* neighbors. This is the scale path:
+  at 10^12 points the cell equi-join touches only ring cells'
+  partitions.
 """
 
 from __future__ import annotations
 
-from typing import Sequence, Tuple
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.geo import cell_encode, haversine_m
-from ..kernels import cells as kcells
+from ..functions.geo import haversine_m
 
 
 def knn_bruteforce(
@@ -85,8 +79,6 @@ def knn_join(
     q_id: str = "q_id",
     qx: str = "qx",
     qy: str = "qy",
-    min_cell_extent: float | None = None,
-    max_rounds: int = 8,
 ) -> DataFrame:
     """Exact distributed kNN *join*: nearest ``k`` points for every row
     of a query DataFrame (planar metric ``(px-qx)^2 + (py-qy)^2``).
@@ -102,18 +94,15 @@ def knn_join(
     Resolution guarantee: a point in a cell at Chebyshev cell-distance
     > r is > r * min(cell_w, cell_h) away, so once the kth candidate
     distance is within that bound the query is exact. Stragglers in
-    empty regions fall back to brute force after ``max_rounds``.
+    empty regions fall back to brute force after 8 rounds.
 
-    ``q_id`` must be unique across ``queries``. The driver counts pending
-    queries by row but resolved ones by distinct id, so with duplicate
-    ids the pending count never reaches 0 and the loop runs all
-    ``max_rounds``.
+    ``q_id`` must be unique and non-null across ``queries``: the driver
+    counts resolved queries by distinct id, so a duplicate would keep the
+    loop running all 8 rounds and return each neighbor once per copy.
+    Raises ``ValueError`` otherwise.
 
     Returns ``(q_id, qx, qy, point_id, d2, rank)``.
     """
-    if min_cell_extent is None:
-        min_cell_extent = min(cell_w, cell_h)
-
     pts = points.select(
         F.col(point_id).alias("_pt_id"),
         F.col(px).alias("_px"),
@@ -140,11 +129,18 @@ def knn_join(
     prev_r, r = -1, 1
     # pending-set size tracked driver-side: emptiness after each round
     # is (n_pending - n_done == 0), read off the same tiny per-round
-    # aggregate that drives resolution — the former dedicated
-    # `isEmpty()` probe job and the last round's pending re-checkpoint
-    # are gone (the counts are exact, so the loop's path is unchanged).
-    n_pending = pending.count()
-    for _ in range(max_rounds):
+    # aggregate that drives resolution, so no round needs an emptiness
+    # probe job. n_done counts distinct ids, so this is exact only when
+    # the ids are distinct — checked in the same job as the row count.
+    n_pending, n_ids = pending.agg(
+        F.count("*"), F.countDistinct("_q_id")
+    ).first()
+    if n_pending != n_ids:
+        raise ValueError(
+            f"knn_join: {q_id!r} must be unique and non-null "
+            f"({n_pending} rows, {n_ids} distinct ids)"
+        )
+    for _ in range(8):
         # annulus offsets: cells at Chebyshev distance (prev_r, r] — a
         # broadcast DataFrame, NOT an array literal (at r=64 that would
         # be a ~16k-element expression tree and a codegen blowup)
@@ -172,7 +168,7 @@ def knn_join(
             .drop("_rank")
             .localCheckpoint(eager=True)
         )
-        bound = (r * min_cell_extent) ** 2
+        bound = (r * min(cell_w, cell_h)) ** 2
         stats = best.groupBy("_q_id").agg(
             F.count("*").alias("_n"), F.max("d2").alias("_dmax")
         )
@@ -214,94 +210,3 @@ def knn_join(
         "d2",
         "rank",
     )
-
-
-def knn_ring(
-    points: DataFrame,
-    queries: Sequence[Tuple[int, float, float]],
-    k: int,
-    r: int = 6,
-    point_id: str = "point_id",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    max_rounds: int = 6,
-) -> DataFrame:
-    """Exact kNN via cell-ring expansion.
-
-    ``queries``: (q_id, q_lon, q_lat) tuples (small, driver-side).
-    Expands each query's candidate ring until the kth-nearest candidate
-    is provably closer than any point outside the ring, then returns
-    the same schema as :func:`knn_bruteforce`.
-    """
-    spark = points.sparkSession
-    pts = points.withColumn("cell", cell_encode(F.col(lon_col), F.col(lat_col), r))
-
-    # degrees of latitude per cell row; the worst-case shrink of lon
-    # degrees toward the poles means lat spacing is the safe bound
-    _, cell_h = kcells.cell_size_deg(r)
-    deg_to_m = 111194.926644  # meters per degree latitude (2*pi*R/360)
-
-    pending = list(queries)
-    results = None
-    k_ring = 1
-    for _ in range(max_rounds):
-        if not pending:
-            break
-        # (q_id, q_lon, q_lat, cell) cover of the current rings — built
-        # driver-side (|Q| * ring cells rows), broadcast for the equi-join
-        rows = []
-        for q_id_v, q_lon_v, q_lat_v in pending:
-            qcell = kcells.encode(q_lon_v, q_lat_v, r)
-            for c in kcells.ring(qcell, k_ring):
-                rows.append((q_id_v, q_lon_v, q_lat_v, c))
-        ring_df = spark.createDataFrame(
-            rows, "q_id long, q_lon double, q_lat double, cell long"
-        )
-        cand = pts.join(F.broadcast(ring_df), "cell", "inner")
-        dist = haversine_m(F.col(lon_col), F.col(lat_col), F.col("q_lon"), F.col("q_lat"))
-        w = Window.partitionBy("q_id").orderBy(
-            F.col("dist_m").asc(), F.col(point_id).asc()
-        )
-        ranked = (
-            cand.withColumn("dist_m", dist)
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-        )
-        # guarantee: a point outside ring k_ring differs from the query
-        # by > k_ring cells in x or y, i.e. >= k_ring * cell_h degrees
-        # of separation after removing within-cell offsets. In the x
-        # direction a degree shrinks by cos(lat); candidates with
-        # |dy| <= k_ring have |lat| <= |q_lat| + (k_ring + 1) * cell_h,
-        # so that is the worst-case shrink factor.
-        import math
-
-        bounds_m = {}
-        for q_id_v, _, q_lat_v in pending:
-            lat_max = min(89.9, abs(q_lat_v) + (k_ring + 1) * cell_h)
-            cos_min = math.cos(math.radians(lat_max))
-            bounds_m[q_id_v] = k_ring * cell_h * deg_to_m * max(cos_min, 0.0)
-        got = (
-            ranked.groupBy("q_id")
-            .agg(F.count("*").alias("n"), F.max("dist_m").alias("dmax"))
-            .collect()
-        )
-        done_ids = {
-            row["q_id"]
-            for row in got
-            if row["n"] >= k and row["dmax"] <= bounds_m.get(row["q_id"], 0.0)
-        }
-        done_part = ranked.where(F.col("q_id").isin(list(done_ids)) if done_ids else F.lit(False))
-        results = done_part if results is None else results.unionByName(done_part)
-        pending = [q for q in pending if q[0] not in done_ids]
-        k_ring *= 2
-
-    if pending:
-        # fall back to brute force for stragglers (sparse regions)
-        qdf = spark.createDataFrame(
-            list(pending), "q_id long, q_lon double, q_lat double"
-        )
-        bf = knn_bruteforce(
-            pts, qdf, k, point_id=point_id, lon_col=lon_col, lat_col=lat_col
-        )
-        results = bf if results is None else results.unionByName(bf)
-    return results

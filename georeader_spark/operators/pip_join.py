@@ -36,16 +36,10 @@ from ..kernels import geometry as kgeom
 PolyTable = Sequence[Tuple[int, List[kgeom.PolygonT]]]  # (poly_id, multipolygon)
 
 
-def polygon_cover(
-    polygons: PolyTable, r: int, exact: bool = True
-) -> List[Tuple[int, int]]:
-    """(cell, poly_id) cover rows at resolution r.
-
-    ``exact=True`` keeps only cells whose bbox intersects the polygon
-    exactly (corner/center PIP + edge test via polygons_intersect);
-    ``exact=False`` keeps the full bbox cover (cheaper to build, more
-    refine work). Either is correct — refine removes false positives.
-    """
+def polygon_cover(polygons: PolyTable, r: int) -> List[Tuple[int, int]]:
+    """(cell, poly_id) cover rows at resolution r: the bbox cover cells
+    whose bounds intersect the polygon exactly (corner/center PIP + edge
+    test via polygons_intersect). Refine removes the false positives."""
     out: List[Tuple[int, int]] = []
     for poly_id, mp in polygons:
         seen = set()
@@ -54,11 +48,10 @@ def polygon_cover(
             for cell in kcells.cover_bbox(bb[0], bb[1], bb[2], bb[3], r):
                 if cell in seen:
                     continue
-                if exact:
-                    cb = kcells.cell_bounds(cell)
-                    cell_ring = [kgeom.box_ring(cb[0], cb[1], cb[2], cb[3])]
-                    if not kgeom.polygons_intersect(cell_ring, poly):
-                        continue
+                cb = kcells.cell_bounds(cell)
+                cell_ring = [kgeom.box_ring(cb[0], cb[1], cb[2], cb[3])]
+                if not kgeom.polygons_intersect(cell_ring, poly):
+                    continue
                 seen.add(cell)
                 out.append((cell, poly_id))
     return out
@@ -110,13 +103,12 @@ def pip_join(
     lon_col: str = "lon",
     lat_col: str = "lat",
     r: int = 7,
-    how: str = "inner",
     refine: str = "auto",
 ) -> DataFrame:
     """Join points to the polygons containing them.
 
-    Returns ``points`` columns + ``poly_id``. ``how='inner'`` drops
-    unmatched points (sjoin inner semantics, ee_query.py:434-446).
+    Returns ``points`` columns + ``poly_id``; unmatched points drop
+    (sjoin inner semantics, ee_query.py:434-446).
 
     ``refine``: "exprs" runs the exact containment test as JVM half-
     plane expressions (possible when every polygon is a single convex
@@ -138,9 +130,7 @@ def pip_join(
         raise ValueError("refine='exprs' requires single-ring convex polygons")
 
     if refine == "exprs":
-        return _pip_join_exprs(
-            spark, points, polygons, cover, lon_col, lat_col, r, how
-        )
+        return _pip_join_exprs(spark, points, polygons, cover, lon_col, lat_col, r)
 
     # geometry broadcast once per executor for the refine UDF
     sc = spark.sparkContext
@@ -165,13 +155,9 @@ def pip_join(
         "_cover_cell", cell_encode(F.col(lon_col), F.col(lat_col), r)
     ).join(F.broadcast(cover_df), "_cover_cell", "inner")
 
-    matched = candidates.where(
+    return candidates.where(
         pip_refine(F.col(lon_col), F.col(lat_col), F.col("poly_id"))
     ).drop("_cover_cell")
-
-    if how == "inner":
-        return matched
-    raise ValueError(f"unsupported how={how!r}")
 
 
 def _pip_join_exprs(
@@ -182,7 +168,6 @@ def _pip_join_exprs(
     lon_col: str,
     lat_col: str,
     r: int,
-    how: str,
 ) -> DataFrame:
     """Exact refine with the half-plane COEFFICIENTS carried as columns
     of the broadcast cover relation, one row per (cell, poly, ring),
@@ -265,15 +250,12 @@ def _pip_join_exprs(
     drop_cols = ["_cover_cell"] + [
         f"_e{i}_{c}" for i in range(max_edges) for c in ("ax", "ay", "dx", "dy", "pad")
     ]
-    matched = (
+    return (
         points.withColumn("_cover_cell", cell_encode(lon_c, lat_c, r))
         .join(F.broadcast(coeff_df), "_cover_cell", "inner")
         .where(inside)
         .drop(*drop_cols)
     )
-    if how == "inner":
-        return matched
-    raise ValueError(f"unsupported how={how!r}")
 
 
 def boxes_to_polytable(

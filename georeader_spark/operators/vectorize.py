@@ -133,7 +133,7 @@ def _boundary_pairs(edges: DataFrame) -> DataFrame:
     )
 
 
-def _label_graph_components(pairs: DataFrame, max_rounds: int = 64) -> DataFrame:
+def _label_graph_components(pairs: DataFrame) -> DataFrame:
     """Connected components of the (small) boundary-label graph by
     iterative min-label propagation + pointer jumping — O(log D) rounds,
     fully distributed (no pixel rows ever reach the driver).
@@ -148,19 +148,19 @@ def _label_graph_components(pairs: DataFrame, max_rounds: int = 64) -> DataFrame
     old_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(parts))
     try:
-        return _label_graph_components_loop(pairs, max_rounds)
+        return _label_graph_components_loop(pairs)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
-def _label_graph_components_loop(pairs: DataFrame, max_rounds: int) -> DataFrame:
+def _label_graph_components_loop(pairs: DataFrame) -> DataFrame:
     comp = (
         pairs.select(F.col("la").alias("label"))
         .distinct()
         .withColumn("comp", F.col("label"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_rounds):
+    for _ in range(64):
         # neighbor-min: smallest comp among my neighbors
         nmin = (
             pairs.join(comp, pairs["lb"] == comp["label"])

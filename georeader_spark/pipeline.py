@@ -1,16 +1,16 @@
 """The flagship pages pipeline (north rule end-to-end, SURVEY.md §7.0):
 
 pages(url, warc_ts, html, text, lang)
-  ① extract  — html -> text (Arrow UDF, byte-identity enforced inline)
-               + geotag parse -> (lon, lat)
+  ① extract  — html -> text (JVM regexp chain, byte-identity enforced
+               inline) + geotag parse -> (lon, lat)
   ② encode   — GridCell at r=7 (JVM expressions)
   ③ PIP join — broadcast cover equi-join + vectorized refine
   ④ tile     — window/tile assignment under the Europe grid spec
   ⑤ metrics  — per-(cell, poly) counts (the cell-histogram metric)
 
-Scale shape: stage ① is one Arrow pass (the only Python); ②④ are
-codegen expressions; ③ joins against a broadcast relation (no shuffle
-of the pages side); ⑤ is a partial-agg groupBy — the only wide
+Scale shape: stage ① is built-in regexp expressions (no Python); ②④
+are codegen expressions; ③ joins against a broadcast relation (no
+shuffle of the pages side); ⑤ is a partial-agg groupBy — the only wide
 dependency in the whole pipeline, keyed by (cell, poly_id) whose
 cardinality is tiny next to the input. Hot geotag cells therefore skew
 only the *final* agg, which partial aggregation already flattens;
@@ -20,83 +20,31 @@ plans/lineage.salt_for_skew handles operators where that is not true.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BooleanType,
-    DoubleType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from .functions.geo import cell_encode
-from .kernels import text as ktext
+from .functions.text_sql import extract_text_col, geotag_lat_col, geotag_lon_col
 from .operators.pip_join import boxes_to_polytable, pip_join
 from .operators.tiling import assign_points_to_tiles
 from .queries import CELL_R, PIP_BOXES, PIP_TRIS, TILE_SIZE, TILE_TRANSFORM
 from .sources.pages import pages as synth_pages
 
-_EXTRACT_SCHEMA = StructType(
-    [
-        StructField("ext_text", StringType()),
-        StructField("lon", DoubleType()),
-        StructField("lat", DoubleType()),
-    ]
-)
 
-
-@F.pandas_udf(_EXTRACT_SCHEMA)
-def extract_udf(html: pd.Series) -> pd.DataFrame:
-    """Arrow-batched extraction: text + geotag in one pass over the
-    html bytes (kernels.text — the same module is the test oracle)."""
-    texts = []
-    lons = []
-    lats = []
-    for h in html:
-        b = bytes(h)
-        texts.append(ktext.extract_text(b))
-        tag = ktext.extract_geotag(b)
-        if tag is None:
-            lons.append(None)
-            lats.append(None)
-        else:
-            lons.append(tag[0])
-            lats.append(tag[1])
-    return pd.DataFrame({"ext_text": texts, "lon": lons, "lat": lats})
-
-
-def extract_stage(
-    pages: DataFrame, check_invariant: bool = True, jvm: bool = True
-) -> DataFrame:
-    """① html -> (ext_text, lon, lat). When ``check_invariant`` the
-    north-rule byte-identity (ext_text == text) is enforced as a filter
-    column so a violation is observable as a row-count drop (and
-    test-asserted to be zero).
-
-    ``jvm=True`` (default) runs the extraction as built-in regexp
-    expressions (whole-stage codegen — "UDFs are the slow path");
-    ``jvm=False`` uses the Arrow-batched UDF over the shared kernel.
-    Both are byte-identity-tested against each other and the kernel.
-    """
-    if jvm:
-        from .functions.text_sql import extract_text_col, geotag_lat_col, geotag_lon_col
-
-        out = pages.withColumns(
-            {
-                "ext_text": extract_text_col(F.col("html")),
-                "lon": geotag_lon_col(F.col("html")),
-                "lat": geotag_lat_col(F.col("html")),
-            }
-        )
-    else:
-        out = pages.withColumn("_ext", extract_udf(F.col("html"))).select(
-            "*", "_ext.ext_text", "_ext.lon", "_ext.lat"
-        ).drop("_ext")
-    if check_invariant:
-        out = out.withColumn("text_ok", F.col("ext_text") == F.col("text"))
-    return out
+def extract_stage(pages: DataFrame) -> DataFrame:
+    """① html -> (ext_text, lon, lat) as built-in regexp expressions
+    (whole-stage codegen — "UDFs are the slow path"), byte-identity-
+    tested against the shared kernels.text extraction. The north-rule
+    byte-identity (ext_text == text) is the ``text_ok`` column, so a
+    violation is observable as a row-count drop (and test-asserted to
+    be zero)."""
+    return pages.withColumns(
+        {
+            "ext_text": extract_text_col(F.col("html")),
+            "lon": geotag_lon_col(F.col("html")),
+            "lat": geotag_lat_col(F.col("html")),
+        }
+    ).withColumn("text_ok", F.col("ext_text") == F.col("text"))
 
 
 def pip_polytable():
@@ -113,8 +61,6 @@ def pages_pipeline(
     n_rows: int = 20000,
     pages_df: DataFrame | None = None,
     repartition: bool = True,
-    lineage_cut: bool = False,
-    gate_join: bool = True,
 ) -> DataFrame:
     """End-to-end: returns per-(cell, poly_id) page counts.
 
@@ -136,31 +82,14 @@ def pages_pipeline(
     # the extraction Project evaluates ONCE and codegen CSE shares the
     # decode across ext_text/lon/lat. Same structural trick as the PIP
     # refine's coefficients-as-broadcast-columns.
-    if gate_join:
-        gate = F.broadcast(spark.createDataFrame([(True,)], "_pass boolean"))
-        ok = extracted.join(
-            gate,
-            (F.col("text_ok") & F.col("lon").isNotNull()) == F.col("_pass"),
-            "inner",
-        ).drop("_pass")
-    else:  # plain filter (pushes extraction into the scan; A/B control)
-        ok = extracted.where(F.col("text_ok") & F.col("lon").isNotNull())
+    gate = F.broadcast(spark.createDataFrame([(True,)], "_pass boolean"))
+    ok = extracted.join(
+        gate,
+        (F.col("text_ok") & F.col("lon").isNotNull()) == F.col("_pass"),
+        "inner",
+    ).drop("_pass")
     encoded = ok.withColumn("cell", cell_encode(F.col("lon"), F.col("lat"), CELL_R))
-    # Extract-stage boundary. Round 1 needed a localCheckpoint lineage
-    # cut here: the PIP refine was then a points-side-only literal
-    # predicate, which Catalyst pushed below the join into the scan
-    # (duplicating the geotag-regex extraction per reference) and whose
-    # O(n_polygons) OR-chain blew the 64 KB janino codegen limit. Both
-    # pathologies were removed STRUCTURALLY in round 2 by carrying the
-    # half-plane coefficients as broadcast-side columns
-    # (operators/pip_join._pip_join_exprs): the predicate now references
-    # both join sides (never pushable below the join) and is
-    # O(max_edges) in size (always codegen-able), so the default is no
-    # cut — measured +10% at local[32] and +9% at local[8] over the
-    # checkpointed shape. ``lineage_cut=True`` remains available as the
-    # local twin of a production Iceberg stage checkpoint
-    # (plans/lineage.StageStore) when a durable extract boundary is
-    # wanted for resume.
+    # No lineage cut needed: the refine references both join sides (_pip_join_exprs).
     # Byte diet for the wide stages: page identity travels as an 8-byte
     # xxhash64 id, not the url string (~60-90 B/row) — the repartition
     # exchange and every operator after it move 32 B/row of fixed-width
@@ -172,8 +101,6 @@ def pages_pipeline(
     )
     if repartition:
         slim = slim.repartition(2 * spark.sparkContext.defaultParallelism)
-    if lineage_cut:
-        slim = slim.localCheckpoint(eager=False)
     joined = pip_join(slim, pip_polytable(), r=6)
     tiled = assign_points_to_tiles(
         joined, TILE_TRANSFORM, TILE_SIZE, x_col="lon", y_col="lat"

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.geo import cell_encode
-from ..pipeline import extract_udf
+from ..pipeline import extract_stage
 
 
 def streaming_cell_counts(
@@ -30,9 +30,7 @@ def streaming_cell_counts(
     window_len: str = "1 day",
 ) -> DataFrame:
     stream = spark.readStream.schema(schema).parquet(pages_dir)
-    extracted = stream.withColumn("_ext", extract_udf(F.col("html"))).select(
-        "warc_ts", "_ext.lon", "_ext.lat"
-    )
+    extracted = extract_stage(stream).select("warc_ts", "lon", "lat")
     encoded = extracted.where(F.col("lon").isNotNull()).withColumn(
         "cell", cell_encode(F.col("lon"), F.col("lat"), r)
     )
@@ -76,10 +74,9 @@ def streaming_pages_pipeline(
     tile assignment -> watermarked event-time window counts per
     (day, cell, poly, tile). AvailableNow-drained batch-parity tested
     against the batch pipeline's counts."""
-    from ..functions.geo import cell_encode
     from ..operators.pip_join import pip_join
     from ..operators.tiling import assign_points_to_tiles
-    from ..pipeline import extract_stage, pip_polytable
+    from ..pipeline import pip_polytable
     from ..queries import CELL_R, TILE_SIZE, TILE_TRANSFORM
 
     stream = spark.readStream.schema(schema).parquet(pages_dir)

@@ -38,6 +38,30 @@ def _plan_node_names(df) -> list:
     return walk(df._jdf.queryExecution().executedPlan())
 
 
+def _analyzed_expr_classes(df) -> set:
+    """Class names of every expression in the analysed plan (works for
+    streaming DataFrames, which have no executed plan until started)."""
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    def walk_expr(e):
+        out = {e.getClass().getSimpleName()}
+        for c in seq(e.children()):
+            out |= walk_expr(c)
+        return out
+
+    def walk(node):
+        out = set()
+        for e in seq(node.expressions()):
+            out |= walk_expr(e)
+        for c in seq(node.children()):
+            out |= walk(c)
+        return out
+
+    return walk(df._jdf.queryExecution().analyzed())
+
+
 class TestPlanShapes:
     def test_pip_join_is_broadcast(self, spark):
         """The polygon-cover side must broadcast: shuffling the points
@@ -700,6 +724,32 @@ class TestArrowEvalPythonCount:
 
         df = REGISTRY[name][0](spark, sf_dir)
         assert _plan_node_names(df).count("ArrowEvalPython") == 2
+
+
+class TestNoPythonInPagesPlans:
+    """Stage ① of the flagship and of both streaming pipelines is the
+    JVM regexp chain (pipeline.extract_stage): no Python UDF may
+    re-enter these plans."""
+
+    def test_pages_pipeline_executed_plan(self, spark):
+        from georeader_spark.pipeline import pages_pipeline
+
+        names = _plan_node_names(pages_pipeline(spark, n_rows=2000))
+        assert "ArrowEvalPython" not in names and "BatchEvalPython" not in names
+
+    def test_streaming_analyzed_plans(self, spark, tmp_path):
+        from georeader_spark.sources.pages import pages
+        from georeader_spark.streaming.cell_counts import (
+            streaming_cell_counts,
+            streaming_pages_pipeline,
+        )
+
+        src_dir = str(tmp_path / "pages")
+        pages(spark, 200).write.parquet(src_dir)
+        schema = spark.read.parquet(src_dir).schema
+        for build in (streaming_cell_counts, streaming_pages_pipeline):
+            classes = _analyzed_expr_classes(build(spark, src_dir, schema))
+            assert "PythonUDF" not in classes, build.__name__
 
 
 class TestStreamingLshDedup:

@@ -13,7 +13,7 @@ from georeader_spark.kernels.affine import Affine
 from georeader_spark.kernels.slices import create_windows
 from georeader_spark.operators import raster as R
 from georeader_spark.operators import similarity as S
-from georeader_spark.operators.knn import knn_bruteforce, knn_ring
+from georeader_spark.operators.knn import knn_bruteforce, knn_join
 from georeader_spark.operators.pip_join import boxes_to_polytable, pip_join, polygon_cover
 from georeader_spark.operators.reproject import (
     resample_tiles,
@@ -98,20 +98,6 @@ class TestPipJoin:
 
 
 class TestKnn:
-    def test_ring_equals_bruteforce(self, spark):
-        pts_df, lon, lat = _rand_points(spark, n=3000, seed=11)
-        queries = [(0, -3.7, 40.4), (1, 2.35, 48.85), (2, 29.5, 59.5), (3, -9.9, 35.1)]
-        qdf = spark.createDataFrame(queries, "q_id long, q_lon double, q_lat double")
-        bf = {
-            (r["q_id"], r["rank"]): r["point_id"]
-            for r in knn_bruteforce(pts_df, qdf, 5).collect()
-        }
-        rg = {
-            (r["q_id"], r["rank"]): r["point_id"]
-            for r in knn_ring(pts_df, queries, 5, r=6).collect()
-        }
-        assert bf == rg
-
     def test_bruteforce_matches_numpy(self, spark):
         from georeader_spark.kernels.crs import haversine_meters
 
@@ -127,8 +113,6 @@ class TestKnn:
         assert got == expect
 
     def test_knn_join_dataframe_queries_matches_numpy(self, spark):
-        from georeader_spark.operators.knn import knn_join
-
         pts_df, lon, lat = _rand_points(spark, n=2000, seed=7)
         # query DataFrame (the API round 1 lacked), incl. one query in
         # an empty region to exercise the brute-force straggler path
@@ -146,6 +130,15 @@ class TestKnn:
             d2 = (lon - qx_) ** 2 + (lat - qy_) ** 2
             expect = list(np.lexsort((np.arange(len(d2)), d2))[:4])
             assert [p for _, p in sorted(got[q])] == expect
+
+    def test_knn_join_rejects_duplicate_q_id(self, spark):
+        pts_df, _, _ = _rand_points(spark, n=200, seed=7)
+        qdf = spark.createDataFrame(
+            [(0, 2.0, 45.0), (1, 5.0, 50.0), (1, 5.0, 50.0)],
+            "q_id long, qx double, qy double",
+        )
+        with pytest.raises(ValueError, match="3 rows, 2 distinct ids"):
+            knn_join(pts_df, qdf, k=3, cell_w=2.0, cell_h=2.0, px="lon", py="lat")
 
 
 class TestTiling:
