@@ -65,16 +65,6 @@ _TOKEN_SPLIT_RE = re.compile(r"\s+")
 # BPE-ish subword pieces: runs of letters, runs of digits, single punct
 _BPE_RE = re.compile(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]")
 
-#: tiny per-language stopword lists for the n-gram/stopword language-ID
-#: heuristic. Chosen to be SQL-countable (plain substring counts).
-STOPWORDS = {
-    "en": ["the", "and", "of"],
-    "es": ["el", "la", "de"],
-    "fr": ["le", "la", "et"],
-    "de": ["der", "die", "und"],
-    "pt": ["o", "de", "que"],
-}
-
 
 def whitespace_token_count(text: str) -> int:
     t = text.strip()

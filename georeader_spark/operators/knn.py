@@ -11,14 +11,17 @@ Two strategies:
   one pass over the big table, no shuffle of the big side beyond the
   rank partitioning on query id. Fully SQL-expressible -> oracle-gated.
 - :func:`knn_join` — a query *DataFrame* against the points on a
-  planar grid: candidates come from an equi-join on the cells within a
-  Chebyshev ring of each query's cell, and the ring doubles for queries
-  that did not find k *guaranteed* neighbors. This is the scale path:
-  at 10^12 points the cell equi-join touches only ring cells'
+  planar grid: candidates come from one equi-join on the cells within a
+  Chebyshev ring of each query's cell, the ring radius sized up front
+  from the points' density, and queries that did not find k
+  *guaranteed* neighbors go to one brute-force pass. This is the scale
+  path: at 10^12 points the cell equi-join touches only ring cells'
   partitions.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -65,6 +68,33 @@ def knn_bruteforce(
     )
 
 
+# Largest ring radius in cells: (2 * 128 + 1)^2 = 66,049 ring cells per
+# query. Queries a ring this wide leaves unresolved go to brute force.
+_R_MAX = 128
+
+
+def _ring_radius(k: int, n_q: int, n_pts: int, nx: int, ny: int,
+                 cell_w: float, cell_h: float) -> int:
+    """Smallest Chebyshev ring radius r (in cells, 1 <= r <=
+    min(max(nx, ny), _R_MAX)) whose inscribed disk of radius
+    r * min(cell_w, cell_h) holds fewer than k of ``n_pts`` points,
+    spread uniformly over ``nx x ny`` cells, for fewer than half of the
+    ``n_q`` queries in expectation. The disk count is Poisson; its lower
+    tail is summed term by term in log space, so it stays finite for
+    any k."""
+    c = min(cell_w, cell_h)
+    lam = n_pts / (nx * cell_w * ny * cell_h)
+
+    def n_short(r):  # expected queries with < k points within r * c
+        mu = lam * math.pi * (r * c) ** 2
+        return n_q * sum(
+            math.exp(j * math.log(mu) - mu - math.lgamma(j + 1)) for j in range(k)
+        )
+
+    span = min(max(nx, ny), _R_MAX)
+    return next((r for r in range(1, span) if n_short(r) < 0.5), span)
+
+
 def knn_join(
     points: DataFrame,
     queries: DataFrame,
@@ -86,20 +116,37 @@ def knn_join(
     This is the scale path the round-1 API lacked: queries are a
     DataFrame (10^6 query points fine), candidates come from a bucketed
     equi-join on grid cells of size (cell_w, cell_h) anchored at
-    (x0, y0), rings expand geometrically for unresolved queries, and
-    the driver only ever sees per-round *counts* — never data rows.
-    Powers griddata nearest/linear gather (griddata.py:286-440
-    semantics) and DataFrame-scale kNN.
+    (x0, y0), and the driver only ever sees one aggregate row and one
+    count — never data rows. Powers griddata nearest/linear gather
+    (griddata.py:286-440 semantics) and DataFrame-scale kNN.
+
+    One candidate pass: a single aggregate job checks ``q_id`` and
+    measures the points (count and the 1st-99th percentile cell extent
+    on each axis); the ring radius r is the smallest, up to 128 cells,
+    for which, at that uniform density, fewer than half of the queries
+    are expected to see fewer than k points (see :func:`_ring_radius`).
+    One offsets-by-points candidate join is ranked and checkpointed
+    once. With fewer than k points (or none) no query can resolve, so
+    the candidate pass is skipped and every query goes to brute force.
 
     Resolution guarantee: a point in a cell at Chebyshev cell-distance
-    > r is > r * min(cell_w, cell_h) away, so once the kth candidate
-    distance is within that bound the query is exact. Stragglers in
-    empty regions fall back to brute force after 8 rounds.
+    > r is > r * min(cell_w, cell_h) away, so a query whose kth
+    candidate distance is within that bound is exact. One ``count()``
+    of the resolved queries decides whether any failed; only then are
+    those queries added by a brute-force pass, so dense inputs plan no
+    cross join. Trade-off: the radius is global. On heavily clustered
+    points the density is that of the extent holding the bulk of them,
+    so queries in sparse regions (and near outliers outside it) go to
+    the brute-force pass, which scans the points once per call; queries
+    in a cluster denser than that extent scan more candidate cells than
+    they need.
 
-    ``q_id`` must be unique and non-null across ``queries``: the driver
-    counts resolved queries by distinct id, so a duplicate would keep the
-    loop running all 8 rounds and return each neighbor once per copy.
-    Raises ``ValueError`` otherwise.
+    ``q_id`` must be unique and non-null across ``queries``: resolved
+    queries are counted by distinct id against the query row count.
+    Raises ``ValueError`` otherwise. ``queries`` is evaluated up to
+    three times (the aggregate, the ring join and the brute-force
+    filter), so it must be deterministic; checkpoint an expensive
+    query plan before the call.
 
     Returns ``(q_id, qx, qy, point_id, d2, rank)``.
     """
@@ -110,48 +157,48 @@ def knn_join(
         F.floor((F.col(px) - F.lit(x0)) / F.lit(cell_w)).cast("long").alias("_cx"),
         F.floor((F.col(py) - F.lit(y0)) / F.lit(cell_h)).cast("long").alias("_cy"),
     )
-    pending = queries.select(
+    qs = queries.select(
         F.col(q_id).alias("_q_id"),
         F.col(qx).alias("_qx"),
         F.col(qy).alias("_qy"),
         F.floor((F.col(qx) - F.lit(x0)) / F.lit(cell_w)).cast("long").alias("_qcx"),
         F.floor((F.col(qy) - F.lit(y0)) / F.lit(cell_h)).cast("long").alias("_qcy"),
-    ).localCheckpoint(eager=True)
+    )
 
     d2 = (F.col("_px") - F.col("_qx")) * (F.col("_px") - F.col("_qx")) + (
         F.col("_py") - F.col("_qy")
     ) * (F.col("_py") - F.col("_qy"))
     w = Window.partitionBy("_q_id").orderBy(F.col("d2").asc(), F.col("_pt_id").asc())
 
-    spark = points.sparkSession
-    best = None
-    resolved = None
-    prev_r, r = -1, 1
-    # pending-set size tracked driver-side: emptiness after each round
-    # is (n_pending - n_done == 0), read off the same tiny per-round
-    # aggregate that drives resolution, so no round needs an emptiness
-    # probe job. n_done counts distinct ids, so this is exact only when
-    # the ids are distinct — checked in the same job as the row count.
-    n_pending, n_ids = pending.agg(
-        F.count("*"), F.countDistinct("_q_id")
-    ).first()
-    if n_pending != n_ids:
+    # one job: the q_id check and the points' density aggregate; the
+    # extent is the 1st-99th percentile cell range, so a few far
+    # outliers do not dilute the density of the bulk of the points
+    n_q, n_ids, n_pts, cx, cy = (
+        qs.agg(F.count("*"), F.countDistinct("_q_id"))
+        .crossJoin(pts.agg(
+            F.count("*"),
+            F.percentile_approx("_cx", [0.01, 0.99]),
+            F.percentile_approx("_cy", [0.01, 0.99]),
+        ))
+        .first()
+    )
+    if n_q != n_ids:
         raise ValueError(
             f"knn_join: {q_id!r} must be unique and non-null "
-            f"({n_pending} rows, {n_ids} distinct ids)"
+            f"({n_q} rows, {n_ids} distinct ids)"
         )
-    for _ in range(8):
-        # annulus offsets: cells at Chebyshev distance (prev_r, r] — a
-        # broadcast DataFrame, NOT an array literal (at r=64 that would
-        # be a ~16k-element expression tree and a codegen blowup)
-        offsets = [
-            (dx, dy)
-            for dx in range(-r, r + 1)
-            for dy in range(-r, r + 1)
-            if max(abs(dx), abs(dy)) > prev_r
-        ]
-        off_df = spark.createDataFrame(offsets, "dx long, dy long")
-        ring = pending.join(F.broadcast(off_df)).select(
+    resolved, pending = None, qs
+    if n_pts and n_pts >= k:  # else no query can find k points: brute force
+        r = _ring_radius(
+            k, n_q, n_pts, cx[1] - cx[0] + 1, cy[1] - cy[0] + 1, cell_w, cell_h
+        )
+        # ring offsets as a broadcast DataFrame, NOT an array literal (a
+        # wide ring would be a huge expression tree and a codegen blowup)
+        off_df = points.sparkSession.createDataFrame(
+            [(dx, dy) for dx in range(-r, r + 1) for dy in range(-r, r + 1)],
+            "dx long, dy long",
+        )
+        ring = qs.join(F.broadcast(off_df)).select(
             "_q_id", "_qx", "_qy",
             (F.col("_qcx") + F.col("dx")).alias("_cx"),
             (F.col("_qcy") + F.col("dy")).alias("_cy"),
@@ -159,11 +206,10 @@ def knn_join(
         cand = ring.join(pts, ["_cx", "_cy"]).select(
             "_q_id", "_qx", "_qy", "_pt_id", d2.alias("d2")
         )
-        allc = cand if best is None else best.unionByName(cand)
         # per-query candidate sets are ring-bounded (small), so a plain
         # rank per query is cheap here — unlike the all-pairs case
         best = (
-            allc.withColumn("_rank", F.row_number().over(w))
+            cand.withColumn("_rank", F.row_number().over(w))
             .where(F.col("_rank") <= k)
             .drop("_rank")
             .localCheckpoint(eager=True)
@@ -175,24 +221,14 @@ def knn_join(
         done_ids = stats.where(
             (F.col("_n") >= k) & (F.col("_dmax") <= F.lit(bound))
         ).select("_q_id")
-        # one tiny action per round: |done| over the checkpointed best
-        # (replaces the former per-round isEmpty() job on pending)
-        n_done = done_ids.count()
-        newly = best.join(done_ids, "_q_id", "leftsemi")
-        resolved = newly if resolved is None else resolved.unionByName(newly)
-        n_pending -= n_done
-        if n_pending == 0:
-            pending = None
-            break
-        done_renamed = done_ids.withColumnRenamed("_q_id", "_done_id")
-        pending = pending.join(
-            done_renamed, pending["_q_id"] == F.col("_done_id"), "leftanti"
-        ).localCheckpoint(eager=True)
-        best = best.join(done_renamed, best["_q_id"] == F.col("_done_id"), "leftanti")
-        prev_r, r = r, r * 2
+        resolved = best.join(done_ids, "_q_id", "leftsemi")
+        pending = (
+            None if done_ids.count() == n_q
+            else qs.join(done_ids, "_q_id", "leftanti")
+        )
 
-    if pending is not None and n_pending > 0:
-        # stragglers (empty regions): brute force just those queries
+    if pending is not None:
+        # unresolved queries: brute force just those
         pairs = pts.crossJoin(
             F.broadcast(pending.select("_q_id", "_qx", "_qy"))
         ).select("_q_id", "_qx", "_qy", "_pt_id", d2.alias("d2"))

@@ -344,30 +344,24 @@ Q_KNN_SQL = _knn_sql()
 
 
 def q_knn_ring(spark, sf_dir):
-    """Ring-expansion kNN (the scale path): candidates only from cells
-    within the expanding Chebyshev ring of each query's cell; guaranteed
-    exact by the ring distance bound — must equal the brute-force oracle
+    """Ring kNN (the scale path): candidates only from cells within a
+    density-sized Chebyshev ring of each query's cell; guaranteed exact
+    by the ring distance bound — must equal the brute-force oracle
     (same SQL as q_knn_bruteforce).
 
-    One Spark job per round: the ranked top-k (k * |Q| rows, tiny) is
-    collected directly and done-ness decided driver-side; only
-    straggler queries expand. The result is assembled from collected
-    rows, so the returned DataFrame costs nothing extra.
+    One candidates job: the ranked top-k (k * |Q| rows, tiny) is
+    collected directly and done-ness decided driver-side. The result is
+    assembled from collected rows, so the returned DataFrame costs
+    nothing extra. Queries the bound cannot verify (sparse or empty
+    regions) go to the exact brute-force path, filtered to their ids —
+    total driver work is one count, one candidates job and at most one
+    lazy fallback, regardless of data distribution.
 
-    Driver-round bound: every query starts at the max ring radius (the
-    largest the former histogram hint could pick), so dense fixtures
-    verify in ONE candidates job with no histogram pass; the expansion
-    loop is capped at 6 radius-doublings (a 64x initial-radius disk),
-    after which any still-unverified query falls back to the exact
-    brute-force path — total jobs are bounded at 6 candidate rounds +
-    1 fallback regardless of data distribution, and exactness never
-    depends on the cap.
-
-    CONTRACT: this driver-orchestrated loop is for SMALL query sets
+    CONTRACT: this driver-collected ring is for SMALL query sets
     (|Q|=20 here). For large Q —
     a table of queries rather than a literal list — the scalable
     all-DataFrame path is ``operators.knn.knn_join`` (cell-bucketed
-    equi-join, no driver rounds); do not copy this loop for that case.
+    equi-join, counts only on the driver); do not copy this for that case.
     """
     pts = _points(spark, sf_dir)
     # r=8 (0.70 deg cells): the former r=6 cells were 2.8 deg — at
@@ -381,78 +375,65 @@ def q_knn_ring(spark, sf_dir):
     )
     _, cell_h = kcells.cell_size_deg(r)
 
-    # Initial radius from measured density instead of the old per-cell
-    # histogram job: one metadata-cheap count gives the expected K-th
-    # neighbor distance r_K = sqrt(K / (pi * rho)) over the fixture's
-    # 40x25 deg bbox; a 4x safety factor against the worst-case
-    # cos(lat) (~0.4 at the bbox's north edge) makes the dense fixtures
-    # verify in ONE candidates job. The hint only sizes the first
-    # probe — the verified-bound loop below remains the exactness
-    # guarantee, and sparse/skewed data expands exactly as before.
+    # Ring radius from measured density: one metadata-cheap count gives
+    # the expected K-th neighbor distance r_K = sqrt(K / (pi * rho))
+    # over the fixture's 40x25 deg bbox; a 4x safety factor against the
+    # worst-case cos(lat) (~0.4 at the bbox's north edge) makes the
+    # dense fixtures verify in the ONE candidates job. The radius only
+    # sizes the candidate set — the verified bound below remains the
+    # exactness guarantee, and unverified queries fall back.
     n_pts = max(pts.count(), 1)
     rho = n_pts / 1000.0
     r_k = math.sqrt(KNN_K / (math.pi * rho))
     k_init = min(max(int(math.ceil(4.0 * r_k / (cell_h * 0.4))), 1), 24)
 
-    done_rows = []
-    pending = list(KNN_QUERIES)
-    radius = {q: k_init for q, _, _ in KNN_QUERIES}
-    for _round in range(6):
-        if not pending:
-            break
-        rows = []
-        for q, qlon, qlat in pending:
-            qcell = kcells.encode(qlon, qlat, r)
-            qcos = math.cos(math.radians(qlat))
-            for c in kcells.ring(qcell, radius[q]):
-                rows.append((q, c, qlon, qlat, qcos))
-        ring_df = spark.createDataFrame(
-            rows, "q_id int, cell long, q_lon double, q_lat double, q_cos double"
+    rows = []
+    for q, qlon, qlat in KNN_QUERIES:
+        qcell = kcells.encode(qlon, qlat, r)
+        qcos = math.cos(math.radians(qlat))
+        for c in kcells.ring(qcell, k_init):
+            rows.append((q, c, qlon, qlat, qcos))
+    ring_df = spark.createDataFrame(
+        rows, "q_id int, cell long, q_lon double, q_lat double, q_cos double"
+    )
+    cand = pts_c.join(F.broadcast(ring_df), "cell")
+    # d2 from broadcast-side columns: the same IEEE ops on the same
+    # doubles as the oracle SQL's per-query CASE chain
+    dlat = F.col("lat") - F.col("q_lat")
+    dlon = (F.col("lon") - F.col("q_lon")) * F.col("q_cos")
+    w = W.partitionBy("q_id").orderBy(F.col("d2").asc(), F.col("event_id").asc())
+    ranked = (
+        cand.select(
+            "q_id", "event_id",
+            (dlat * dlat + dlon * dlon).alias("d2"),
         )
-        cand = pts_c.join(F.broadcast(ring_df), "cell")
-        # d2 from broadcast-side columns: the same IEEE ops on the same
-        # doubles as the former per-query literal CASE chain
-        dlat = F.col("lat") - F.col("q_lat")
-        dlon = (F.col("lon") - F.col("q_lon")) * F.col("q_cos")
-        w = W.partitionBy("q_id").orderBy(F.col("d2").asc(), F.col("event_id").asc())
-        ranked = (
-            cand.select(
-                "q_id", "event_id",
-                (dlat * dlat + dlon * dlon).alias("d2"),
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= KNN_K)
-            .select("q_id", F.col("event_id").alias("point_id"), "rank", "d2")
-            .collect()
-        )
-        # guarantee in *planar degree* metric: any point outside ring
-        # radius[q] is >= radius[q] * cell_h degrees away in lat, or
-        # radius[q] * cell_h * cos(lat_range) in weighted lon
-        by_q: dict = {}
-        for row in ranked:
-            by_q.setdefault(row["q_id"], []).append(row)
-        done = set()
-        for q, qlon, qlat in pending:
-            got = by_q.get(q, [])
-            k_ring = radius[q]
-            lat_max = min(89.9, abs(qlat) + (k_ring + 1) * cell_h)
-            cmin = max(math.cos(math.radians(lat_max)), 0.0)
-            bound = (k_ring * cell_h * cmin) ** 2
-            if len(got) >= KNN_K and max(g["d2"] for g in got) <= bound:
-                done.add(q)
-                done_rows.extend(
-                    (q, g["point_id"], g["rank"]) for g in got
-                )
-        pending = [p for p in pending if p[0] not in done]
-        for q, _, _ in pending:
-            radius[q] *= 2
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= KNN_K)
+        .select("q_id", F.col("event_id").alias("point_id"), "rank", "d2")
+        .collect()
+    )
+    # guarantee in *planar degree* metric: any point outside ring
+    # radius k_init is >= k_init * cell_h degrees away in lat, or
+    # k_init * cell_h * cos(lat_range) in weighted lon
+    by_q: dict = {}
+    for row in ranked:
+        by_q.setdefault(row["q_id"], []).append(row)
+    done_rows, pending = [], []
+    for q, qlon, qlat in KNN_QUERIES:
+        got = by_q.get(q, [])
+        lat_max = min(89.9, abs(qlat) + (k_init + 1) * cell_h)
+        cmin = max(math.cos(math.radians(lat_max)), 0.0)
+        bound = (k_init * cell_h * cmin) ** 2
+        if len(got) >= KNN_K and max(g["d2"] for g in got) <= bound:
+            done_rows.extend((q, g["point_id"], g["rank"]) for g in got)
+        else:
+            pending.append(q)
 
     results = spark.createDataFrame(
         done_rows, "q_id int, point_id long, rank int"
     ) if done_rows else None
     if pending:
-        ids = [p[0] for p in pending]
-        bf = q_knn_bruteforce(spark, sf_dir).where(F.col("q_id").isin(ids))
+        bf = q_knn_bruteforce(spark, sf_dir).where(F.col("q_id").isin(pending))
         results = bf if results is None else results.unionByName(bf)
     return results
 
@@ -2541,10 +2522,11 @@ def q_ann_ivf_topk(spark, sf_dir):
 def q_knn_join(spark, sf_dir):
     """Distributed kNN JOIN with a *DataFrame* of query points (the
     round-1 API gap: ring kNN took only a driver-side list). Candidates
-    from cell-bucketed ring expansion, exact by the Chebyshev distance
-    bound; the driver sees only per-round counts. Oracle = brute-force
-    cross join in SQL — d2 is computed from joined columns with the
-    identical expression, so every double matches bit-for-bit."""
+    from one density-sized cell-bucketed ring, exact by the Chebyshev
+    distance bound; the driver sees only one aggregate row and one
+    count. Oracle = brute-force cross join in SQL — d2 is computed from
+    joined columns with the identical expression, so every double
+    matches bit-for-bit."""
     from .operators.knn import knn_join
 
     pts = _points(spark, sf_dir).select(

@@ -50,7 +50,6 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-WARC_VERSION = "WARC/1.0"
 _CRLF = "\r\n"
 #: fixed warcinfo date (the file-level record carries no page instant)
 _WARCINFO_DATE = "2024-01-01T00:00:00Z"

@@ -880,3 +880,96 @@ class TestStreamingLshDedup:
         for i in range(20):
             is_dup, dup_of = got[5000 + i]
             assert is_dup and dup_of is not None and dup_of < 120
+
+
+class TestKnnJoinJobCount:
+    """knn_join sizes its ring once, from one density aggregate, so a
+    warm call starts the same fixed number of Spark jobs on dense and on
+    sparse points: the job count must not grow with the number of
+    queries the first candidates leave unresolved. AQE is off so that
+    no re-planning job is counted. The jobs are the density aggregate,
+    the top-k checkpoint, the resolved count and their broadcasts; the
+    bound is one above the five this session starts today."""
+
+    MAX_JOBS = 6
+
+    @staticmethod
+    def _jobs(spark, group, build):
+        sc = spark.sparkContext
+        build()  # cold call: JIT and codegen
+        sc.setJobGroup(group, group)
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def test_dense_and_sparse_start_equal_jobs(self, spark):
+        import numpy as np
+
+        from georeader_spark.operators.knn import knn_join
+
+        def build(n_pts, k):
+            # the raster_griddata_nearest shape: a 40 x 40 query grid
+            # over a 40 x 25 extent in 4 x 2.5 cells
+            rng = np.random.default_rng(n_pts)
+            xy = rng.uniform((0.0, 0.0), (40.0, 25.0), (n_pts, 2))
+            pts = spark.createDataFrame(
+                [(i, float(x), float(y)) for i, (x, y) in enumerate(xy)],
+                "point_id long, x double, y double",
+            )
+            qs = spark.range(1600).select(
+                F.col("id").alias("q_id"),
+                ((F.col("id") % 40) + 0.5).alias("qx"),
+                ((F.floor(F.col("id") / 40) + 0.5) * 0.625).alias("qy"),
+            )
+            return lambda: knn_join(pts, qs, k=k, cell_w=4.0, cell_h=2.5)
+
+        key = "spark.sql.adaptive.enabled"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, "false")
+        try:
+            dense = self._jobs(spark, "knn-jobs-dense", build(2000, 4))
+            sparse = self._jobs(spark, "knn-jobs-sparse", build(20, 1))
+        finally:
+            spark.conf.set(key, prev)
+        assert dense == sparse <= self.MAX_JOBS, (dense, sparse)
+
+
+def _lazy_plan_fns():
+    from georeader_spark import queries as Q
+
+    return sorted(
+        name for name, fn in vars(Q).items()
+        if callable(fn) and hasattr(fn, "__wrapped__")
+    )
+
+
+class TestLazyPlanHandles:
+    """Handles reused per session (``_lazy_plan`` functions, ``_points``,
+    ``_pq``) must be pure logical plans: a shuffle, a cached relation or
+    a checkpointed RDD in them would mean the reuse caches work or data.
+    Node names are matched exactly: every parquet scan prints
+    ``InMemoryFileIndex``, which is no cached relation."""
+
+    FORBIDDEN = {"Exchange", "InMemoryRelation", "InMemoryTableScan",
+                 "Scan ExistingRDD"}
+
+    def test_lazy_plan_fns_found(self):
+        assert {"q_transform_crs", "q_transform_crs_families"} <= set(
+            _lazy_plan_fns()
+        )
+
+    @pytest.mark.parametrize(
+        "name", _lazy_plan_fns() + ["_points", "_pq"]
+    )
+    def test_handle_is_a_pure_plan(self, spark, sf_dir, name):
+        from georeader_spark import queries as Q
+
+        if name == "_pq":
+            df = Q._pq(spark, f"{sf_dir}/events.parquet")
+        else:
+            df = getattr(Q, name)(spark, sf_dir)
+        names = _plan_node_names(df)
+        assert not self.FORBIDDEN & set(names), names

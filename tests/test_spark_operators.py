@@ -140,6 +140,85 @@ class TestKnn:
         with pytest.raises(ValueError, match="3 rows, 2 distinct ids"):
             knn_join(pts_df, qdf, k=3, cell_w=2.0, cell_h=2.0, px="lon", py="lat")
 
+    @staticmethod
+    def _degenerate(case):
+        """(point ids, x, y, queries, k) on a 10 x 10 extent of unit
+        cells; ids are shuffled so that id order is not row order."""
+        rng = np.random.default_rng(11)
+        xy = rng.uniform(0.0, 10.0, (2500, 2))
+        qs = [(0, 2.5, 2.5), (1, 7.25, 4.5), (2, 50.0, -40.0)]
+        n, k = {
+            "empty_points": (0, 3), "single_point": (1, 1),
+            "k_above_n": (5, 8), "identical_points": (50, 5),
+            "empty_queries": (100, 3), "cluster_far_query": (200, 4),
+            "large_k": (2500, 2000),
+        }[case]
+        xy = xy[:n]
+        if case == "identical_points":
+            xy = np.full((n, 2), 3.0)
+        if case == "cluster_far_query":
+            xy = 1.0 + 0.01 * rng.standard_normal((n, 2))
+            qs = [(0, 1.0, 1.0), (1, 60.0, 80.0)]
+        if case == "empty_queries":
+            qs = []
+        ids = 3 * rng.permutation(n) + 5
+        return ids, xy[:, 0], xy[:, 1], qs, k
+
+    @staticmethod
+    def _assert_knn_join_exact(spark, ids, x, y, queries, k):
+        pts_df = spark.createDataFrame(
+            [(int(i), float(a), float(b)) for i, a, b in zip(ids, x, y)],
+            "point_id long, x double, y double",
+        )
+        qdf = spark.createDataFrame(queries, "q_id long, qx double, qy double")
+        got = {}
+        for r in knn_join(pts_df, qdf, k=k, cell_w=1.0, cell_h=1.0).collect():
+            got.setdefault(r["q_id"], []).append((r["rank"], r["point_id"]))
+        assert set(got) <= {q for q, _, _ in queries}
+        for q, qx_, qy_ in queries:
+            d2 = (x - qx_) * (x - qx_) + (y - qy_) * (y - qy_)
+            expect = list(ids[np.lexsort((ids, d2))[:k]])
+            rows = sorted(got.get(q, []))
+            assert [rk for rk, _ in rows] == list(range(1, min(k, len(ids)) + 1))
+            assert [p for _, p in rows] == expect
+
+    @pytest.mark.parametrize("case", [
+        "empty_points", "single_point", "k_above_n", "identical_points",
+        "empty_queries", "cluster_far_query", "large_k",
+    ])
+    def test_knn_join_degenerate_inputs_match_numpy(self, spark, case):
+        self._assert_knn_join_exact(spark, *self._degenerate(case))
+
+    @pytest.mark.parametrize("case", ["k_above_n", "cluster_far_outlier"])
+    def test_knn_join_wide_extent_keeps_ring_small(self, spark, monkeypatch, case):
+        """On a ~1000-cell extent the ring stays small: with k above the
+        point count no ring is built at all, and one far outlier point
+        does not dilute the density a dense cluster's queries are sized
+        from. Both stay exact; the outlier's own query goes to brute
+        force."""
+        from georeader_spark.operators import knn as K
+
+        radii = []
+        real = K._ring_radius
+        monkeypatch.setattr(
+            K, "_ring_radius", lambda *a: radii.append(real(*a)) or radii[-1]
+        )
+        rng = np.random.default_rng(5)
+        if case == "k_above_n":
+            xy = np.column_stack([rng.uniform(0.0, 1000.0, 5), rng.uniform(0.0, 1.0, 5)])
+            qs = [(i, float(i) * 5.0 + 0.3, 0.5) for i in range(200)]
+            k, max_r = 8, None
+        else:
+            xy = np.vstack([rng.uniform(1.0, 4.0, (300, 2)), [[900.0, 950.0]]])
+            qs = [(i, 1.0 + 0.06 * i, 2.5) for i in range(50)] + [(50, 899.0, 951.0)]
+            k, max_r = 4, 2
+        ids = 3 * rng.permutation(len(xy)) + 5
+        self._assert_knn_join_exact(spark, ids, xy[:, 0], xy[:, 1], qs, k)
+        if max_r is None:
+            assert radii == []
+        else:
+            assert len(radii) == 1 and radii[0] <= max_r, radii
+
 
 class TestTiling:
     @pytest.mark.parametrize(
